@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** The listener bus's drain is package-private to Spark; the trace
+  * recorder needs it so every job, stage and task event of a span has
+  * been delivered before the span's numbers are read. */
+object PerfbenchBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
